@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MINHASH_SEEDS = [f"s{i}" for i in range(8)]
 # Default banding: 2 bands x 4 rows. P(candidate) = 1-(1-j^4)^2 — steep
@@ -310,32 +311,92 @@ def jaccard_verify(
     return out
 
 
-def _union_find_labels(rows, cap: int) -> "dict[int, int] | None":
-    """Driver-side connected components over collected (a, b) edge rows:
-    {node: component minimum} with path compression and min-root unions.
-    Returns None when ``rows`` overflowed the cap (caller falls back to the
-    distributed loop). Iterative find — chain-shaped clusters build parent
-    chains deeper than Python's recursion limit well inside the cap."""
-    if len(rows) > cap:
-        return None
-    parent: dict[int, int] = {}
+class _UnionFind:
+    """Driver-side connected components for duplicate-edge sets below the
+    collect cap — with path compression, union-by-root-min (labels are
+    component minima, matching the distributed loop), and optional bridge
+    tracking: with ``seen_max`` set, a union joining two components that
+    each already contain a SEEN node (id <= seen_max) records the bridge
+    (the incremental deduper's frozen-label policy)."""
 
-    def find(x: int) -> int:
+    def __init__(self, seen_max: "int | None" = None):
+        self.parent: dict[int, int] = {}
+        self.seen_of: dict[int, int] = {}  # root -> min seen-keeper in comp
+        self.bridges: list[tuple[int, int]] = []
+        self.seen_max = seen_max
+
+    def find(self, x: int) -> int:
+        # iterative root-chase + path compression: chain-shaped duplicate
+        # clusters (sliding/templated text) build parent chains as deep as
+        # the cluster, and a recursive find blows Python's ~1000-frame
+        # recursion limit well inside the 500k-edge driver-path cap
+        # (review-caught with a 3000-doc chain repro)
         root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while x != root:
-            parent[x], x = root, parent[x]
+        while self.parent.setdefault(root, root) != root:
+            root = self.parent[root]
+        p = x
+        while p != root:
+            self.parent[p], p = root, self.parent[p]
+        if self.seen_max is not None and x <= self.seen_max:
+            s = self.seen_of.get(root)
+            if s is None or x < s:
+                self.seen_of[root] = x
         return root
 
-    for r in rows:
-        ra, rb = find(int(r[0])), find(int(r[1]))
+    def union(self, a: int, b: int) -> None:
+        ra, rb = self.find(a), self.find(b)
         if ra == rb:
-            continue
+            return
+        # keep the smaller id as root so root == component minimum
         if rb < ra:
             ra, rb = rb, ra
-        parent[rb] = ra
-    return {x: find(x) for x in list(parent)}
+        sa, sb = self.seen_of.get(ra), self.seen_of.get(rb)
+        if sa is not None and sb is not None and sa != sb:
+            self.bridges.append((min(sa, sb), max(sa, sb)))
+        if sb is not None:
+            self.seen_of[ra] = min(sa, sb) if sa is not None else sb
+        self.parent[rb] = ra
+        self.seen_of.pop(rb, None)
+
+
+def _driver_union_find(
+    pairs: DataFrame, cap: int, seen_max: "int | None" = None
+) -> "_UnionFind | None":
+    """ONE bounded job: ``limit(cap+1)`` both fetches the (doc_a, doc_b)
+    edge set and detects overflow. Returns the union-find over the edges,
+    or None when they overflowed ``cap`` (the caller falls back to the
+    distributed loop)."""
+    head = (
+        pairs.select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"))
+        .limit(cap + 1)
+        .collect()
+    )
+    if len(head) > cap:
+        return None
+    uf = _UnionFind(seen_max)
+    for a, b in head:
+        uf.union(int(a), int(b))
+    return uf
+
+
+def _label_docs(docs: DataFrame, id_col: str, labels: dict) -> DataFrame:
+    """(id, keeper_doc_id) for every doc from driver-resolved component
+    labels: a tiny broadcast map joined onto ``docs``; docs without a
+    label (singletons) keep themselves."""
+    mapping = [(int(d), int(k)) for d, k in labels.items() if k != d]
+    if not mapping:
+        return docs.select(id_col, F.col(id_col).alias("keeper_doc_id"))
+    map_df = docs.sparkSession.createDataFrame(
+        mapping, f"{id_col} long, _cc_label long"
+    )
+    return (
+        docs.select(id_col)
+        .join(F.broadcast(map_df), id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("_cc_label"), F.col(id_col)).alias("keeper_doc_id"),
+        )
+    )
 
 
 #: duplicate-edge sets at or below this size resolve components with ONE
@@ -344,7 +405,7 @@ def _union_find_labels(rows, cap: int) -> "dict[int, int] | None":
 #: minima). The loop costs O(log diameter) ROUNDS, each an eager
 #: localCheckpoint job + joins + a driver count (~12-15 jobs for typical
 #: graphs) — pure fixed overhead when the edge set fits on the driver.
-#: Same policy and default as IncrementalDeduper.driver_cc_max_edges;
+#: IncrementalDeduper.driver_cc_max_edges defaults to this value;
 #: <= 0 forces the distributed path (tests pin both paths identical).
 DRIVER_CC_MAX_EDGES = 500_000
 
@@ -363,10 +424,11 @@ def dedup_clusters(
     document (singletons keep themselves); rows with keeper != self are the
     drop set.
 
-    Execution: below ``driver_cc_max_edges`` the edge set is collected
-    (bounded by limit cap+1 — overflow falls through) and resolved with a
-    driver union-find: ONE job over the pair pipeline instead of the
-    round-based loop, and the upstream candidates/verify lineage runs
+    Execution: below ``driver_cc_max_edges`` (integral ids only) the edge
+    set is collected (bounded by limit cap+1 — overflow falls through) and
+    resolved with a driver union-find: ONE job over the pair pipeline
+    instead of the round-based loop, and the upstream candidates/verify
+    lineage runs
     exactly once (the loop's seed checkpoint ran it twice via the
     edge-direction union). Above the cap: iterative min-label propagation
     with joins + aggregates only (no GraphX / no RDDs). Per round every
@@ -381,38 +443,19 @@ def dedup_clusters(
     per round (bounded, like the CDC gate stats). ``stats``, when given,
     records {"rounds": n} (0 = driver path). Both paths produce identical
     keepers (pinned in tests/test_operators.py)."""
-    if driver_cc_max_edges and driver_cc_max_edges > 0:
-        head = (
-            pairs.select(
-                F.col("doc_a").cast("long"), F.col("doc_b").cast("long")
-            )
-            .limit(driver_cc_max_edges + 1)
-            .collect()
-        )
-        labels_map = _union_find_labels(head, driver_cc_max_edges)
-        if labels_map is not None:
+    # the driver path labels with long ids: string or fractional ids would
+    # fail the cast or collapse onto wrong keepers, so they take the loop
+    integral = all(
+        isinstance(df.schema[c].dataType, T.IntegralType)
+        for df, c in ((pairs, "doc_a"), (pairs, "doc_b"), (docs, id_col))
+    )
+    if integral and driver_cc_max_edges and driver_cc_max_edges > 0:
+        uf = _driver_union_find(pairs, driver_cc_max_edges)
+        if uf is not None:
             if stats is not None:
                 stats["rounds"] = 0
-            mapping = [
-                (int(d), int(k)) for d, k in labels_map.items() if k != d
-            ]
-            if not mapping:
-                return docs.select(
-                    id_col, F.col(id_col).alias("keeper_doc_id")
-                )
-            map_df = docs.sparkSession.createDataFrame(
-                mapping, f"{id_col} long, _cc_label long"
-            )
-            return (
-                docs.select(id_col)
-                .join(F.broadcast(map_df), id_col, "left")
-                .select(
-                    id_col,
-                    F.coalesce(F.col("_cc_label"), F.col(id_col)).alias(
-                        "keeper_doc_id"
-                    ),
-                )
-            )
+            labels = {x: uf.find(x) for x in list(uf.parent)}
+            return _label_docs(docs, id_col, labels)
     # localCheckpoint (eager) per round: iterative algorithms MUST truncate
     # lineage, or round k replays rounds 1..k-1 and the plan grows without
     # bound; checkpointed blocks are reclaimed by the context cleaner.

@@ -13,6 +13,32 @@ LakeTable and signs/probes ONLY the new batch:
                -> exact Jaccard verify         candidate pairs only
     all new docs + band rows appended          gated, idempotent commits
 
+Structure: three (data table, index table) pairs — LSH text
+(:class:`IncrementalDeduper`), SRP embedding
+(:class:`IncrementalEmbeddingIndex`) and chunk-key span
+(:class:`IncrementalChunkIndex`) — share ONE exactly-once frame,
+:class:`_IncrementalIndex`, written once as gate -> sign -> probe ->
+commit -> heal:
+
+- gate: ``_gate`` (stats job, uniqueness, replay/heal decision, monotone
+  check); empty and replayed batches return before any scope is entered;
+- scope: one ``contextlib.ExitStack`` per batch — AQE off, a shuffle width
+  sized from ``rows_per_task`` x the variant's ``_fan_out``, persisted
+  intermediates released on exit, plus the small-batch repartition;
+- commit: the data-table append carrying ``dedup.applied``, then
+  ``_append_index`` (always looked up through ``self``);
+- heal: ``_heal_index`` re-signs the pending id ranges from the data table;
+- shared reads: ``probe_lake_buckets``, the live-bucket scan, the
+  candidate-row fetch, ``pending_ranges`` and ``auto_compact``.
+
+Each variant keeps its schemas, ``create`` and three hooks: ``_sign`` (the
+batch's rows keyed by doc_id: band rows, SRP bucket rows, or chunk
+occurrences), ``_probe_verify`` (returns the data rows and index rows to
+commit plus the variant's result fields: keeper resolution and bridge
+policy for LSH, quantized cosine for SRP, ``_flag_chunks`` and its
+pushed-IN probe for chunks) and ``_index_rows`` (what a heal commits from
+signed rows).
+
 Scale shape: the index table is keyed by the LSH bucket string, so a probe
 touches only the lake buckets the new batch's band rows hash into — the
 index-side SCAN opens those buckets' files and nothing else (file-level
@@ -33,8 +59,8 @@ reduced to exemplar edges; a bucket that hot IS a near-identical cluster
 (every member agreed on a full MinHash band), so cluster membership —
 the thing dedup consumes — is preserved whenever the exemplar verifies.
 The batch-side new x new join applies the same policy via
-``dedup.lsh_candidate_pairs(max_bucket=...)``. Pinned on a planted
-mega-cluster fixture in tests/test_hot_bucket.py.
+``dedup.capped_self_join`` (the join behind ``dedup.lsh_candidate_pairs``).
+Pinned on a planted mega-cluster fixture in tests/test_hot_bucket.py.
 
 Semantic contract (pinned by the two-sequential-runs == one-batch-run test):
 
@@ -81,6 +107,7 @@ Semantic contract (pinned by the two-sequential-runs == one-batch-run test):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -88,39 +115,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import contextlib
-
 from migration_pair_spark.cdc.apply import (
     _aqe_disabled,
     covered_expr,
     merge_ranges,
     subtract_ranges,
 )
-
-
-@contextlib.contextmanager
-def _scoped_shuffle_partitions(spark, n: int):
-    """Temporarily size spark.sql.shuffle.partitions DOWN to ``n`` for one
-    ingest's jobs (saved/restored; never raises the value). The ingest
-    pipelines shuffle O(batch) rows — at the session default (cluster
-    width) a small batch pays a full wave of near-empty reduce tasks per
-    shuffle stage, pure scheduler overhead across the ~10 stages of an
-    ingest. ``n`` derives from the batch's ROW COUNT (the same
-    rows_per_task sizing as the signing repartition), so a cluster-scale
-    batch keeps the session value — this is data-adaptive, not a local
-    tuning constant."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    if int(prev) <= n:
-        yield
-        return
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 from migration_pair_spark.lakehouse.table import LakeTable
 from migration_pair_spark.operators import dedup as dd
+# re-exported: the union-find lives with dedup_clusters
+from migration_pair_spark.operators.dedup import _UnionFind  # noqa: F401
 
 APPLIED_PROP = "dedup.applied"
 
@@ -148,12 +152,70 @@ _INDEX_SCHEMA = T.StructType(
 )
 
 
-def _with_system(df: DataFrame, bucket: F.Column) -> DataFrame:
+@contextlib.contextmanager
+def _scoped_shuffle_partitions(spark, n: int):
+    """Temporarily size spark.sql.shuffle.partitions DOWN to ``n`` for one
+    ingest's jobs (saved/restored; never raises the value). The ingest
+    pipelines shuffle O(batch) rows — at the session default (cluster
+    width) a small batch pays a full wave of near-empty reduce tasks per
+    shuffle stage, pure scheduler overhead across the ~10 stages of an
+    ingest. ``n`` derives from the batch's ROW COUNT (the same
+    rows_per_task sizing as the signing repartition), so a cluster-scale
+    batch keeps the session value — this is data-adaptive, not a local
+    tuning constant."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    if int(prev) <= n:
+        yield
+        return
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@contextlib.contextmanager
+def _kept():
+    """Yields ``keep(df)``: persist ``df`` (lazy — materialized inside its
+    first consumer job, reused after) until the scope exits. The round-4
+    ingest spent ~7 jobs on eager localCheckpoints of DataFrames that only
+    needed recompute protection, not lineage truncation."""
+    cached: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _with_system(df: DataFrame, table: LakeTable) -> DataFrame:
+    """``df`` with the system columns of a fresh append to ``table``."""
     return (
         df.withColumn("_lsn", F.lit(0).cast("long"))
         .withColumn("_deleted", F.lit(False))
-        .withColumn("_bucket", bucket)
+        .withColumn("_bucket", table.bucket_expr())
     )
+
+
+def _live(table: LakeTable, buckets: list[int]) -> DataFrame:
+    """The non-tombstoned rows of ``table``'s named lake buckets."""
+    return table.read_buckets(buckets).filter(
+        ~F.coalesce(F.col("_deleted"), F.lit(False))
+    )
+
+
+def _touched_buckets(table: LakeTable, rows: DataFrame, col: str) -> list[int]:
+    """The lake buckets of ``table`` that ``rows[col]`` hash into: a
+    bounded driver collect (<= table.n_buckets values) — the same shape as
+    the CDC gate's touched-bucket set."""
+    ids = rows.select(table.bucket_expr(col).alias("b")).distinct().collect()
+    return sorted(int(r["b"]) for r in ids)
 
 
 def applied_ranges(
@@ -197,176 +259,394 @@ def _covered(lo: int, hi: int, ranges: list[tuple[int, int]]) -> bool:
     return not subtract_ranges([(lo, hi)], ranges)
 
 
-def _ingest_gate(
-    data_table: LakeTable,
-    index_table: LakeTable,
-    new_rows: DataFrame,
-    batch_id: str,
-    id_col: str,
-    noun: str,
-    heal_fn,
-) -> dict:
-    """The exactly-once batch gate shared by ALL THREE incremental indexes
-    (LSH text, SRP embedding, chunk-key span): one bounded stats job (id
-    range + count + uniqueness), the replay/heal decision from the two
-    applied-interval sets, the monotone check, pre-probe healing of any
-    pending interval (an index missing committed entries would accept
-    what it should reject — never retractable), and the gap-absorbed
-    committed range. Factored in round 5 when the third near-verbatim
-    copy landed (review-caught): a gate fix applied to one copy and not
-    the others is exactly how the round-4 unique-id hole happened.
+class _IncrementalIndex:
+    """A persisted (data table, index table) pair with exactly-once batch
+    ingest: the frame all three variants share (module docstring).
 
-    Returns one of
-      {"status": "empty"}
-      {"status": "replayed", "healed": bool}   (fully-covered batch)
-      {"status": "ok", "lo", "hi", "n_new", "rng", "applied"}
-    and raises ValueError on duplicate or non-monotone ids."""
-    stats = new_rows.agg(
-        F.min(id_col).alias("lo"),
-        F.max(id_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct(id_col).alias("nd"),
-    ).collect()[0]
-    if stats["lo"] is None:
-        return {"status": "empty"}
-    lo, hi, n_new = int(stats["lo"]), int(stats["hi"]), int(stats["n"])
-    if int(stats["nd"]) != n_new:
-        raise ValueError(
-            f"batch {batch_id}: {noun} must be unique within a batch "
-            f"({n_new - int(stats['nd'])} duplicated) — a duplicate id "
-            "would commit duplicate rows under the exactly-once gate"
+    Subclasses set the data table's directory and id column, the lineage
+    tag of their commits, the result keys holding DataFrames (None on
+    empty/replayed batches) and counters (0 on empty batches), and
+    ``_fan_out`` — derived shuffle rows per batch row, which sizes the
+    scoped shuffle width — and implement the hooks ``_sign`` and
+    ``_probe_verify`` (``_index_rows`` defaults to the band-row index)."""
+
+    _DATA, _ID, _TAG = "corpus", "doc_id", "dedup"
+    _FRAMES: tuple[str, ...] = ()
+    _COUNTERS: tuple[str, ...] = ()
+    _fan_out: int
+    rows_per_task: int
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root
+        self.data = LakeTable.load(spark, os.path.join(root, self._DATA))
+        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+
+    @classmethod
+    def _create_pair(
+        cls, spark, root, data_schema, data_buckets, props, index_schema,
+        index_buckets, data_blooms=(), index_blooms=(),
+    ):
+        """Create both tables, each with an empty applied-interval set;
+        the index is keyed by its schema's first column."""
+        LakeTable.create(
+            spark,
+            os.path.join(root, cls._DATA),
+            data_schema,
+            key_col=cls._ID,
+            n_buckets=data_buckets,
+            properties={**props, APPLIED_PROP: "[]"},
+            bloom_filter_cols=data_blooms,
         )
-    applied = applied_ranges(data_table)
-    idx_applied = applied_ranges(index_table, data_table)
-    if _covered(lo, hi, applied):
-        if _covered(lo, hi, idx_applied):
-            return {"status": "replayed", "healed": False}
-        # heal the FULL data-vs-index difference (not just this batch's
-        # literal range): committed intervals are gap-absorbed, so the
-        # pending span may start below the batch's min id
-        heal_fn(subtract_ranges(applied, idx_applied))
-        return {"status": "replayed", "healed": True}
-    # None, not -1, as the nothing-applied sentinel: ids are arbitrary
-    # longs (snapshot seeds deliberately use NEGATIVE ids to stay below
-    # the LSN space) and a -1 sentinel rejected any negative first batch
-    # (review-caught by the seeding tests)
-    seen_max = applied[-1][1] if applied else None
-    if seen_max is not None and lo <= seen_max:
-        raise ValueError(
-            f"batch {batch_id}: {noun} must be monotone across batches "
-            f"(batch min {lo} <= seen max {seen_max})"
+        LakeTable.create(
+            spark,
+            os.path.join(root, "index"),
+            index_schema,
+            key_col=index_schema.fieldNames()[0],
+            n_buckets=index_buckets,
+            properties={APPLIED_PROP: "[]"},
+            bloom_filter_cols=index_blooms,
         )
-    pending = subtract_ranges(applied, idx_applied)
-    if pending:
-        heal_fn(pending)
-    # the committed interval extends DOWN to the watermark: the monotone
-    # gate guarantees ids in (seen_max, lo) can never legitimately arrive
-    # later, so absorbing the gap keeps the applied set at exactly ONE
-    # interval forever — O(1) manifest state, not O(batch history)
-    return {
-        "status": "ok",
-        "lo": lo,
-        "hi": hi,
-        "n_new": n_new,
-        "rng": (seen_max + 1 if seen_max is not None else lo, hi),
-        "applied": applied,
-    }
+        return cls(spark, root)
 
+    # ---------------------------------------------------------------- hooks
 
-def _auto_compact_tables(
-    tables: "list[tuple[str, LakeTable]]", files_per_bucket: int
-) -> dict:
-    """Shared maintenance policy for the incremental index pairs: fold any
-    lake bucket holding more than ``files_per_bucket`` data files back to
-    one file (LakeTable.compact on exactly those buckets). A months-long
-    streaming ingest or sweep loop otherwise accumulates one file per
-    (batch x touched bucket) without bound — probe cost then grows with
-    BATCH HISTORY (per-file open/footer overhead), not data volume. The
-    CDC follow loop has had this policy since round 4
-    (auto_compact_files_per_bucket); this is the same metric and the same
-    trigger for the dedup family's tables. Returns {table name: {"buckets":
-    [...], "version": v}} for the tables actually compacted."""
-    done: dict = {}
-    for name, table in tables:
-        over = sorted(
-            b
-            for b, n in table.files_per_bucket().items()
-            if n > files_per_bucket
+    def _sign(self, batch: DataFrame) -> DataFrame:
+        """The batch's signed rows, keyed by doc_id."""
+        raise NotImplementedError
+
+    def _probe_verify(
+        self, batch: DataFrame, keep, g: dict, batch_id: str
+    ) -> tuple[DataFrame, DataFrame, dict]:
+        """(data rows, index rows, result fields) for a gated batch."""
+        raise NotImplementedError
+
+    def _index_rows(self, signed: DataFrame, keep, n_docs: int) -> DataFrame:
+        """The index rows that ``signed`` rows contribute (LSH/SRP: the
+        bucket rows themselves)."""
+        return signed.select("bucket_key", "doc_id")
+
+    # ------------------------------------------------------------- internals
+
+    def pending_ranges(self) -> list[tuple[int, int]]:
+        """Id intervals committed to the data table but not the index —
+        the exact recovery work a crash between the two commits leaves
+        behind."""
+        return subtract_ranges(
+            applied_ranges(self.data), applied_ranges(self.index, self.data)
         )
-        if over:
-            version = table.compact(bucket_ids=over)
-            done[name] = {"buckets": over, "version": version}
-    return done
+
+    def _refuse_while_lagging(self, op: str, runs: str) -> None:
+        """Purges refuse while the index lags the data table: heal re-signs
+        pending ranges FROM data rows a purge would have holed."""
+        self.data.refresh()
+        self.index.refresh()
+        pending = self.pending_ranges()
+        if pending:
+            raise ValueError(
+                f"{op}: index lags the corpus (pending id ranges "
+                f"{pending}) — run {runs} first (it heals "
+                f"automatically), then purge"
+            )
+
+    def _index_has_rows(self) -> bool:
+        # cold start: an empty index has no probe targets
+        return any(self.index.manifest["buckets"].values())
+
+    def probe_lake_buckets(self, rows: DataFrame) -> list[int]:
+        """The index lake buckets the probe must open: distinct
+        pmod(xxhash64(key), n_buckets) over the NEW batch's index-key rows
+        (see _touched_buckets)."""
+        return _touched_buckets(self.index, rows, self.index.key_col)
+
+    def _probe_index(
+        self, signed: DataFrame, keep=lambda df: df
+    ) -> tuple[DataFrame, list[int]]:
+        """The LSH/SRP probe: bucket-pruned index scan joined to the new
+        band rows — candidate (doc_a, doc_b, seen_doc_id) pairs. The index
+        side reads ONLY the probe buckets' files (new x index — the index
+        never self-joins), and over-cap buckets contribute only their
+        exemplar via the shared tiny-agg + broadcast cap
+        (dedup.cap_exemplar_star; module docstring). ``keep`` persists the
+        pruned scan: the cap consumes it twice (per-bucket aggregate +
+        join back), and without the cache each consumer would re-read the
+        probe buckets' files (review-caught)."""
+        lake_buckets = self.probe_lake_buckets(signed)
+        idx = _live(self.index, lake_buckets).select(
+            "bucket_key", F.col("doc_id").alias("seen_doc_id")
+        )
+        if self.max_bucket:
+            idx = keep(idx)
+        idx = dd.cap_exemplar_star(
+            idx, ["bucket_key"], "seen_doc_id", self.max_bucket
+        )
+        cand = (
+            signed.select("bucket_key", F.col("doc_id").alias("new_doc_id"))
+            .join(idx, "bucket_key")
+            .filter(F.col("seen_doc_id") != F.col("new_doc_id"))
+            .select(
+                F.least("seen_doc_id", "new_doc_id").alias("doc_a"),
+                F.greatest("seen_doc_id", "new_doc_id").alias("doc_b"),
+                "seen_doc_id",
+            )
+            .distinct()
+        )
+        return cand, lake_buckets
+
+    def _candidate_rows(self, ids: DataFrame, *cols: str) -> DataFrame:
+        """Data rows (id + ``cols``) for candidate SEEN ids only, via a
+        bucket-pruned read: collect the bounded set of lake buckets the
+        ids hash into, open only those, semi-join down to the candidates."""
+        buckets = _touched_buckets(self.data, ids, self._ID)
+        return (
+            _live(self.data, buckets)
+            .select(self._ID, *cols)
+            .join(F.broadcast(ids), self._ID, "left_semi")
+        )
+
+    def _lineage(self, kind: str, label: str, n: int) -> dict:
+        # {"dedup_ingest": batch id, "n_docs": n}, {"emb_heal": ranges,
+        # "n_vecs": n}, ...
+        return {f"{self._TAG}_{kind}": label, f"n_{self._ID[:-3]}s": n}
+
+    def _gate(self, batch: DataFrame, batch_id: str) -> dict:
+        """The exactly-once batch gate: one bounded stats job (id range +
+        count + uniqueness), the replay/heal decision from the two
+        applied-interval sets, the monotone check, pre-probe healing of any
+        pending interval (an index missing committed entries would accept
+        what it should reject — never retractable), and the gap-absorbed
+        committed range. One copy for all three variants: a gate fix
+        applied to one copy and not the others is exactly how the round-4
+        unique-id hole happened.
+
+        Returns one of
+          {"status": "empty"}
+          {"status": "replayed", "healed": bool}   (fully-covered batch)
+          {"status": "ok", "lo", "hi", "n_new", "rng", "applied"}
+        and raises ValueError on duplicate or non-monotone ids."""
+        col, noun = self._ID, f"{self._ID[:-3]} ids"
+        stats = batch.agg(
+            F.min(col).alias("lo"),
+            F.max(col).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct(col).alias("nd"),
+        ).collect()[0]
+        if stats["lo"] is None:
+            return {"status": "empty"}
+        lo, hi, n_new = int(stats["lo"]), int(stats["hi"]), int(stats["n"])
+        if int(stats["nd"]) != n_new:
+            raise ValueError(
+                f"batch {batch_id}: {noun} must be unique within a batch "
+                f"({n_new - int(stats['nd'])} duplicated) — a duplicate id "
+                "would commit duplicate rows under the exactly-once gate"
+            )
+        applied = applied_ranges(self.data)
+        idx_applied = applied_ranges(self.index, self.data)
+        if _covered(lo, hi, applied):
+            if _covered(lo, hi, idx_applied):
+                return {"status": "replayed", "healed": False}
+            # heal the FULL data-vs-index difference (not just this batch's
+            # literal range): committed intervals are gap-absorbed, so the
+            # pending span may start below the batch's min id
+            self._heal_index(subtract_ranges(applied, idx_applied))
+            return {"status": "replayed", "healed": True}
+        # None, not -1, as the nothing-applied sentinel: ids are arbitrary
+        # longs (snapshot seeds deliberately use NEGATIVE ids to stay below
+        # the LSN space) and a -1 sentinel rejected any negative first batch
+        # (review-caught by the seeding tests)
+        seen_max = applied[-1][1] if applied else None
+        if seen_max is not None and lo <= seen_max:
+            raise ValueError(
+                f"batch {batch_id}: {noun} must be monotone across batches "
+                f"(batch min {lo} <= seen max {seen_max})"
+            )
+        pending = subtract_ranges(applied, idx_applied)
+        if pending:
+            self._heal_index(pending)
+        # the committed interval extends DOWN to the watermark: the monotone
+        # gate guarantees ids in (seen_max, lo) can never legitimately arrive
+        # later, so absorbing the gap keeps the applied set at exactly ONE
+        # interval forever — O(1) manifest state, not O(batch history)
+        return {
+            "status": "ok",
+            "lo": lo,
+            "hi": hi,
+            "n_new": n_new,
+            "rng": (seen_max + 1 if seen_max is not None else lo, hi),
+            "applied": applied,
+        }
+
+    # --------------------------------------------------------------- ingest
+
+    def _ingest(
+        self, batch: DataFrame, batch_id: str, corpus_properties=None
+    ) -> dict:
+        """gate -> sign -> probe -> commit for one batch (module
+        docstring). A batch of never-committed gap ids is
+        indistinguishable from a redelivery and no-ops; under the monotone
+        allocator contract such a batch is already a violation."""
+        g = self._gate(batch, batch_id)
+        if g["status"] == "empty":
+            # quiet-day case: nothing arrived — clean no-op, no commits
+            return {
+                "replayed": False,
+                "empty": True,
+                **dict.fromkeys(self._FRAMES),
+                "n_new": 0,
+                **dict.fromkeys(self._COUNTERS, 0),
+            }
+        if g["status"] == "replayed":
+            out = {"replayed": True, **dict.fromkeys(self._FRAMES)}
+            if g["healed"]:
+                out["healed"] = "index"
+            return out
+        n_new, rng = g["n_new"], g["rng"]
+        # Parallelize the narrow signing chain: a small batch often arrives
+        # as ONE file -> one input partition, and the explode-heavy map then
+        # runs single-threaded (profiled ~2 s of a ~10 s LSH ingest at
+        # sf0.1). The target partition count is sized by the batch's ROW
+        # count (known from the stats job) — a tiny batch must not fan out
+        # to full cluster width and pay scheduler overhead per near-empty
+        # task; a large multi-file batch keeps its natural partitioning and
+        # pays no shuffle. A related width bounds the ingest's SHUFFLE
+        # stages (scoped conf): reduce waves sized to the batch, not the
+        # cluster — but sized by the DERIVED row volume (_fan_out rows per
+        # batch row), not the raw count, so a small batch never collapses
+        # the verify stages to one task (a doc-count-sized width of 1
+        # serialized the SRP cosine verify: measured 10 s -> 19 s at sf0.1).
+        cap = self.spark.sparkContext.defaultParallelism
+        par = min(cap, max(1, n_new // self.rows_per_task))
+        width = min(cap, max(1, n_new * self._fan_out // self.rows_per_task))
+        with contextlib.ExitStack() as scope:
+            keep = scope.enter_context(_kept())
+            # AQE off for the ingest's own jobs (same refcounted per-session
+            # toggle as the CDC apply): the pipelines are fixed-shape —
+            # explicit broadcasts, known partition counts, the exemplar-star
+            # cap for skew — so AQE's per-stage materialization barrier is
+            # pure overhead (~20% of LSH ingest wall at sf0.1, and one extra
+            # JOB per shuffle stage in the chunk ingest).
+            scope.enter_context(_aqe_disabled(self.spark))
+            scope.enter_context(_scoped_shuffle_partitions(self.spark, width))
+            if 1 < par and batch.rdd.getNumPartitions() < par:
+                batch = keep(batch.repartition(par, self._ID))
+            data_rows, index_rows, out = self._probe_verify(
+                batch, keep, g, batch_id
+            )
+            # -- commit 1: data rows with the applied interval riding the
+            # same manifest (plus any caller properties, atomically)
+            props = {
+                APPLIED_PROP: json.dumps(merge_ranges(g["applied"] + [rng]))
+            }
+            if corpus_properties:
+                props.update(
+                    corpus_properties(*rng)
+                    if callable(corpus_properties)
+                    else dict(corpus_properties)
+                )
+            self.data.append_buckets(
+                _with_system(data_rows, self.data),
+                properties=props,
+                lineage=self._lineage("ingest", batch_id, n_new),
+            )
+            # -- commit 2: index rows. A crash here is healed by the gate.
+            self._append_index(index_rows, rng, batch_id, n_new)
+        return {
+            "replayed": False,
+            **out,
+            "n_new": n_new,
+            f"{self._DATA}_version": self.data.version,
+            "index_version": self.index.version,
+        }
+
+    def _append_index(
+        self, rows: DataFrame, rng: tuple[int, int], batch_id: str, n_docs: int
+    ) -> None:
+        """Commit 2 of an ingest. Always called through ``self``: replacing
+        it is how a crash between the two commits is injected."""
+        self._commit_index(rows, [tuple(rng)], "ingest", batch_id, n_docs)
+
+    def _commit_index(
+        self, rows: DataFrame, ranges: list, kind: str, label: str, n: int
+    ) -> None:
+        self.index.append_buckets(
+            _with_system(rows, self.index),
+            properties={
+                APPLIED_PROP: json.dumps(
+                    merge_ranges(applied_ranges(self.index, self.data) + ranges)
+                )
+            },
+            lineage=self._lineage(kind, label, n),
+        )
+
+    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
+        """Crash-retry path: the data table committed id ranges the index
+        lacks. Re-sign exactly those ranges' rows and complete the index
+        append; signing is deterministic, so the healed index is
+        byte-equal to a clean run's. Full data-table scan filtered by the
+        ranges — the rare recovery path pays one scan; the hot path never
+        does."""
+        batch = (
+            self.data.read()
+            .filter(covered_expr(F.col(self._ID), ranges))
+            .select(*self.data.schema.fieldNames()[:2])  # (id, payload)
+        )
+        with _kept() as keep:
+            signed = keep(self._sign(batch))
+            # interval sizes over-count docs (gap absorption) — harmless:
+            # an overestimate only skips the chunk probe's fast path
+            rows = self._index_rows(
+                signed, keep, sum(hi - lo + 1 for lo, hi in ranges)
+            )
+            # lineage count from the already-persisted signed rows — a
+            # second data scan just for the counter would double the
+            # recovery path's heaviest read (review-caught)
+            n = signed.select("doc_id").distinct().count()
+            self._commit_index(
+                rows, list(ranges), "heal", json.dumps(list(ranges)), n
+            )
+
+    # ----------------------------------------------------------- maintenance
+
+    def auto_compact(self, files_per_bucket: int) -> dict:
+        """Fold any data/index lake bucket holding more than
+        ``files_per_bucket`` data files back to one file (LakeTable.compact
+        on exactly those buckets). A months-long streaming ingest or sweep
+        loop otherwise accumulates one file per (batch x touched bucket)
+        without bound — probe cost then grows with BATCH HISTORY (per-file
+        open/footer overhead), not data volume. Same metric and trigger as
+        the CDC follow loop's auto_compact_files_per_bucket; the sweep
+        bridge and streaming ingest loops call this per batch behind their
+        own knobs. Returns {table name: {"buckets": [...], "version": v}}
+        for the tables actually compacted."""
+        done: dict = {}
+        for name, table in ((self._DATA, self.data), ("index", self.index)):
+            over = sorted(
+                b
+                for b, n in table.files_per_bucket().items()
+                if n > files_per_bucket
+            )
+            if over:
+                done[name] = {
+                    "buckets": over,
+                    "version": table.compact(bucket_ids=over),
+                }
+        return done
 
 
-def _cap_hot_buckets(
-    rows: DataFrame, key_col: str, id_col: str, max_bucket: int | None
-) -> DataFrame:
-    """Index-side hot-bucket guard: buckets with more than ``max_bucket``
-    rows keep only their exemplar (minimum id). Delegates to the shared
-    tiny-agg + broadcast form (dedup.cap_exemplar_star) — the earlier
-    window form shuffled and sorted every index row read by the probe."""
-    return dd.cap_exemplar_star(rows, [key_col], id_col, max_bucket)
-
-
-class _UnionFind:
-    """Driver-side connected components for batch duplicate-edge sets below
-    the collect cap — with path compression, union-by-root-min (labels are
-    component minima, matching dedup_clusters), and bridge tracking: a
-    union joining two components that each already contain a SEEN keeper
-    (node id <= seen_max) records the bridge."""
-
-    def __init__(self, seen_max: int):
-        self.parent: dict[int, int] = {}
-        self.seen_of: dict[int, int] = {}  # root -> min seen-keeper in comp
-        self.bridges: list[tuple[int, int]] = []
-        self.seen_max = seen_max
-
-    def find(self, x: int) -> int:
-        # iterative root-chase + path compression: chain-shaped duplicate
-        # clusters (sliding/templated text) build parent chains as deep as
-        # the cluster, and a recursive find blows Python's ~1000-frame
-        # recursion limit well inside the 500k-edge driver-path cap
-        # (review-caught with a 3000-doc chain repro)
-        root = x
-        while self.parent.setdefault(root, root) != root:
-            root = self.parent[root]
-        p = x
-        while p != root:
-            self.parent[p], p = root, self.parent[p]
-        if x <= self.seen_max:
-            s = self.seen_of.get(root)
-            if s is None or x < s:
-                self.seen_of[root] = x
-        return root
-
-    def union(self, a: int, b: int) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra == rb:
-            return
-        # keep the smaller id as root so root == component minimum
-        if rb < ra:
-            ra, rb = rb, ra
-        sa, sb = self.seen_of.get(ra), self.seen_of.get(rb)
-        if sa is not None and sb is not None and sa != sb:
-            self.bridges.append((min(sa, sb), max(sa, sb)))
-        if sb is not None:
-            self.seen_of[ra] = min(sa, sb) if sa is not None else sb
-        self.parent[rb] = ra
-        self.seen_of.pop(rb, None)
-
-
-class IncrementalDeduper:
+class IncrementalDeduper(_IncrementalIndex):
     """A persisted (corpus, signature-index) pair with exactly-once batch
     ingest. ``corpus`` is keyed by doc_id (bucket-pruned candidate text
     fetch); ``index`` is keyed by the LSH bucket string (bucket-pruned
     probe)."""
 
+    _FRAMES = ("pairs", "keepers")
+    _COUNTERS = ("n_accepted", "n_rejected")
+
     #: duplicate-edge sets at or below this size resolve components with a
     #: driver union-find (one bounded collect) instead of the distributed
     #: label-propagation loop — pure execution tuning, identical results
     #: (equivalence pinned in tests); the fallback keeps the path unbounded.
-    driver_cc_max_edges = 500_000
+    driver_cc_max_edges = dd.DRIVER_CC_MAX_EDGES
 
     #: repartition sizing for the narrow signing chain: spread the batch to
     #: ~this many docs per task, capped at cluster width. Shingling is the
@@ -374,15 +654,16 @@ class IncrementalDeduper:
     rows_per_task = 256
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.corpus = LakeTable.load(spark, os.path.join(root, "corpus"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         p = self.corpus.properties
         self.threshold = float(p["dedup.threshold"])
         self.bands = tuple(tuple(b) for b in json.loads(p["dedup.bands"]))
         self.max_bucket = int(p.get("dedup.max_bucket", "0")) or None
         self.on_bridge = p.get("dedup.on_bridge", "error")
+
+    corpus = property(lambda self: self.data)
+    # band rows per doc (candidate shingle explodes are bigger still)
+    _fan_out = property(lambda self: max(len(self.bands), 2))
 
     @classmethod
     def create(
@@ -403,43 +684,19 @@ class IncrementalDeduper:
             "dedup.bands": json.dumps([list(b) for b in bands]),
             "dedup.max_bucket": str(max_bucket or 0),
             "dedup.on_bridge": on_bridge,
-            APPLIED_PROP: "[]",
         }
-        LakeTable.create(
-            spark,
-            os.path.join(root, "corpus"),
-            _CORPUS_SCHEMA,
-            key_col="doc_id",
-            n_buckets=corpus_buckets,
-            properties=props,
+        # purge_docs removes signature rows by doc_id — a NON-key column of
+        # the index; the bloom keeps that rewrite to ~the files actually
+        # holding the purged ids instead of O(index)
+        return cls._create_pair(
+            spark, root, _CORPUS_SCHEMA, corpus_buckets, props,
+            _INDEX_SCHEMA, index_buckets, index_blooms=("doc_id",),
         )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _INDEX_SCHEMA,
-            key_col="bucket_key",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-            # purge_docs removes signature rows by doc_id — a NON-key
-            # column here; the bloom keeps that rewrite to ~the files
-            # actually holding the purged ids instead of O(index)
-            bloom_filter_cols=("doc_id",),
-        )
-        return cls(spark, root)
-
-    # ------------------------------------------------------------- internals
 
     def seen_max(self) -> int:
         """Highest committed doc id (-1 on an empty corpus)."""
         ranges = applied_ranges(self.corpus)
         return ranges[-1][1] if ranges else -1
-
-    def pending_ranges(self) -> list[tuple[int, int]]:
-        """Doc-id intervals committed to the corpus but not the index — the
-        exact recovery work a crash between the two commits leaves behind."""
-        return subtract_ranges(
-            applied_ranges(self.corpus), applied_ranges(self.index, self.corpus)
-        )
 
     def purge_docs(self, doc_ids, conflict_retries: int = 3) -> dict:
         """Right-to-be-forgotten erasure from the LSH dedup state: the
@@ -463,18 +720,8 @@ class IncrementalDeduper:
         is recorded (``record_suppression=False``): the monotone gate
         already makes re-submission under an old id impossible.
 
-        Refuses while the index lags the corpus for the same reason as
-        IncrementalChunkIndex.purge_source: heal re-signs pending ranges
-        FROM corpus text a purge would have holed."""
-        self.corpus.refresh()
-        self.index.refresh()
-        pending = self.pending_ranges()
-        if pending:
-            raise ValueError(
-                f"purge_docs: index lags the corpus (pending id ranges "
-                f"{pending}) — run any ingest first (it heals "
-                f"automatically), then purge"
-            )
+        Refuses while the index lags the corpus (_refuse_while_lagging)."""
+        self._refuse_while_lagging("purge_docs", "any ingest")
         cv = self.corpus.purge_keys(
             doc_ids, conflict_retries=conflict_retries,
             record_suppression=False,
@@ -492,70 +739,10 @@ class IncrementalDeduper:
             "bucket_key", F.concat_ws("|", F.col("band"), F.col("bucket"))
         )
 
-    def probe_lake_buckets(self, bands_new: DataFrame) -> list[int]:
-        """The index lake buckets the probe must open: distinct
-        pmod(xxhash64(bucket_key), n_buckets) over the NEW batch's band rows.
-        Bounded driver collect (<= index.n_buckets values) — the same shape
-        as the CDC gate's touched-bucket set."""
-        rows = (
-            bands_new.select(
-                self.index.bucket_expr("bucket_key").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["b"]) for r in rows)
-
-    def _probe_index(
-        self, bands_new: DataFrame, keep=lambda df: df
-    ) -> tuple[DataFrame, list[int]]:
-        """Bucket-pruned index scan joined to the new band rows: candidate
-        (seen_doc, new_doc) id pairs. The index side reads ONLY the probe
-        buckets' files (new x index — the index never self-joins), and
-        over-cap buckets contribute only their exemplar (module docstring).
-        ``keep`` persists the pruned scan: the hot-bucket cap consumes it
-        twice (per-bucket aggregate + join back), and without the cache
-        each consumer would re-read the probe buckets' files
-        (review-caught)."""
-        lake_buckets = self.probe_lake_buckets(bands_new)
-        idx = (
-            self.index.read_buckets(lake_buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("bucket_key", F.col("doc_id").alias("seen_doc_id"))
-        )
-        if self.max_bucket:
-            idx = keep(idx)
-        idx = _cap_hot_buckets(idx, "bucket_key", "seen_doc_id", self.max_bucket)
-        cand = (
-            bands_new.select("bucket_key", F.col("doc_id").alias("new_doc_id"))
-            .join(idx, "bucket_key")
-            .filter(F.col("seen_doc_id") != F.col("new_doc_id"))
-            .select(
-                F.least("seen_doc_id", "new_doc_id").alias("doc_a"),
-                F.greatest("seen_doc_id", "new_doc_id").alias("doc_b"),
-                "seen_doc_id",
-            )
-            .distinct()
-        )
-        return cand, lake_buckets
-
-    def _candidate_corpus_rows(self, seen_ids: DataFrame) -> DataFrame:
-        """Text + keeper for candidate SEEN docs only, via a bucket-pruned
-        corpus read: collect the bounded set of corpus lake buckets the
-        candidate ids hash into, open only those, semi-join down to the
-        candidates."""
-        bucket_rows = (
-            seen_ids.select(self.corpus.bucket_expr("doc_id").alias("b"))
-            .distinct()
-            .collect()
-        )
-        buckets = sorted(int(r["b"]) for r in bucket_rows)
-        rows = (
-            self.corpus.read_buckets(buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("doc_id", "text", "keeper_doc_id")
-        )
-        return rows.join(F.broadcast(seen_ids), "doc_id", "left_semi")
+    def _sign(
+        self, docs: DataFrame, arrays: "DataFrame | None" = None
+    ) -> DataFrame:
+        return self._band_rows(dd.minhash_signatures(docs, arrays_df=arrays))
 
     # ------------------------------------------------------ keeper resolution
 
@@ -568,44 +755,22 @@ class IncrementalDeduper:
         At or below ``driver_cc_max_edges`` the edge set is collected (ONE
         bounded job — ``limit(cap+1)`` both fetches the edges and detects
         overflow, replacing the separate count job the round-5 shape paid
-        per ingest) and resolved with a driver union-find instead of the
-        O(log n) distributed label-propagation rounds (each of which costs
-        eager checkpoints); on overflow, the distributed path runs with a
-        label-group bridge check. Both paths produce identical keepers
-        (pinned in tests by forcing the cap negative)."""
-        head = None
+        per ingest) and resolved with the driver union-find shared with
+        dedup.dedup_clusters instead of the O(log n) distributed
+        label-propagation rounds (each of which costs eager checkpoints);
+        on overflow, the distributed path runs with a label-group bridge
+        check. Both paths produce identical keepers (pinned in tests by
+        forcing the cap negative)."""
         cap = self.driver_cc_max_edges
+        uf = None
         if cap is not None and cap >= 0:
-            head = edges.select("doc_a", "doc_b").limit(cap + 1).collect()
-            if len(head) > cap:
-                head = None
-        if head is not None:
-            uf = _UnionFind(seen_max)
-            for r in head:
-                uf.union(int(r["doc_a"]), int(r["doc_b"]))
-            mapping = {
-                x: uf.find(x) for x in list(uf.parent) if x > seen_max
-            }
-            n_rejected = sum(1 for d, k in mapping.items() if k != d)
-            if mapping:
-                map_df = self.spark.createDataFrame(
-                    [(int(d), int(k)) for d, k in mapping.items()],
-                    "doc_id long, _k long",
-                )
-                keepers = (
-                    new_docs.select("doc_id")
-                    .join(F.broadcast(map_df), "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.coalesce("_k", F.col("doc_id")).alias("keeper_doc_id"),
-                    )
-                )
-            else:
-                keepers = new_docs.select(
-                    "doc_id", F.col("doc_id").alias("keeper_doc_id")
-                )
+            uf = dd._driver_union_find(edges, cap, seen_max)
+        if uf is not None:
+            labels = {x: uf.find(x) for x in list(uf.parent) if x > seen_max}
+            n_rejected = sum(1 for d, k in labels.items() if k != d)
             # no checkpoint: unlike the pairs DF, this plan depends only on
             # the caller's input and a tiny local map — safe to return lazy
+            keepers = dd._label_docs(new_docs, "doc_id", labels)
             return keepers, n_rejected, sorted(set(uf.bridges))
         # distributed fallback: label every edge node AND every batch doc,
         # then read bridges off the labels (a component holding >= 2 distinct
@@ -652,250 +817,86 @@ class IncrementalDeduper:
         candidate pair touching the batch, "keepers": DataFrame(doc_id,
         keeper_doc_id) for the batch, plus counters}. On a replayed batch
         the DataFrames are None (already persisted in the corpus)."""
-        # shared gate: stats + uniqueness + replay/heal + monotone + rng
-        # (a batch of never-committed gap ids is indistinguishable from a
-        # redelivery and no-ops; under the monotone allocator contract such
-        # a batch is already a violation)
-        g = _ingest_gate(
-            self.corpus, self.index, new_docs, batch_id, "doc_id", "doc ids",
-            self._heal_index,
+        return self._ingest(new_docs, batch_id)
+
+    def _probe_verify(self, new_docs, keep, g, batch_id):
+        seen_max = g["applied"][-1][1] if g["applied"] else -1
+        # shingle ARRAYS, not exploded rows: signatures derive narrowly
+        # (zero shuffles — see dedup.minhash_signatures) and the verify
+        # stage explodes only candidate docs' arrays
+        arrays = keep(dd.shingle_arrays(new_docs))
+        bands_new = keep(self._sign(new_docs, arrays))
+
+        # -- candidates: new x index (bucket-pruned) + new x new (batch
+        # LSH, hot-bucket capped, reusing the PERSISTED band rows —
+        # re-banding would recompute the minhash agg).
+        cand_new = dd.capped_self_join(
+            bands_new.select("doc_id", "band", "bucket"),
+            ["band", "bucket"], "doc_id", self.max_bucket,
         )
-        if g["status"] == "empty":
-            # quiet-day case: no documents arrived — clean no-op, no commits
-            return {
-                "replayed": False,
-                "empty": True,
-                "pairs": None,
-                "keepers": None,
-                "n_new": 0,
-                "n_accepted": 0,
-                "n_rejected": 0,
-            }
-        if g["status"] == "replayed":
-            out = {"replayed": True, "pairs": None, "keepers": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, corpus_applied = g["n_new"], g["rng"], g["applied"]
-        seen_max = corpus_applied[-1][1] if corpus_applied else -1
+        probe_buckets, keeper_map = [], None
+        if self._index_has_rows():
+            cand_idx, probe_buckets = self._probe_index(bands_new, keep)
+            cand_idx = keep(cand_idx)
+            candidates = keep(
+                cand_idx.select("doc_a", "doc_b").union(cand_new).distinct()
+            )
+            # candidate-only verification: shingle the candidate SEEN
+            # docs (bucket-pruned text fetch) and the new batch only
+            seen_rows = keep(self._candidate_rows(
+                cand_idx.select(F.col("seen_doc_id").alias("doc_id")).distinct(),
+                "text", "keeper_doc_id",
+            ))
+            arrays = keep(arrays.union(
+                dd.shingle_arrays(seen_rows.select("doc_id", "text"))
+            ))
+            keeper_map = seen_rows.select(
+                F.col("doc_id").alias("_sid"),
+                F.col("keeper_doc_id").alias("_sk"),
+            )
+        else:
+            candidates = keep(cand_new.distinct())
+        # localCheckpoint (not persist): `pairs` is returned to the
+        # caller and must survive the deduper's tables being deleted
+        verified = dd.jaccard_verify(
+            new_docs, candidates, arrays_df=arrays
+        ).localCheckpoint()
 
-        # -- sign ONLY the new batch. Reused intermediates are persist()ed
-        # (lazy, materialized inside their first consumer job, reused after)
-        # rather than localCheckpoint()ed (eager: one extra job each) — the
-        # round-4 ingest spent ~7 jobs on eager checkpoints of DataFrames
-        # that only needed recompute protection, not lineage truncation.
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # AQE off for the ingest's own jobs (same refcounted per-session
-        # toggle as the CDC apply): the pipeline is fixed-shape — explicit
-        # broadcasts, known partition counts, and the exemplar-star cap for
-        # skew — so AQE's per-stage materialization barrier is pure
-        # overhead here (~20% of ingest wall at sf0.1, re-measured round 5
-        # after the narrow-signature rewrite; round 4's shuffle-heavy
-        # pipeline had the opposite trade).
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        # Parallelize the narrow signing chain: a small batch often
-        # arrives as ONE file -> one input partition, and the
-        # explode-heavy shingle map then runs single-threaded (profiled
-        # ~2 s of a ~10 s ingest at sf0.1). Target partition count is
-        # sized by the batch's ROW count (known from the stats job) —
-        # a tiny batch must not fan out to full cluster width and pay
-        # scheduler overhead per near-empty task; a large multi-file
-        # batch keeps its natural partitioning and pays no shuffle.
-        # A related width bounds the ingest's SHUFFLE stages (scoped conf):
-        # reduce waves sized to the batch, not the cluster — but sized by
-        # the DERIVED row volume (band rows = len(bands) x docs; candidate
-        # shingle explodes are bigger still), not the raw doc count, so a
-        # small batch never collapses the verify stages to one task.
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
+        # -- keepers: connected components over duplicate edges, with
+        # every SEEN endpoint replaced by its frozen keeper (greedy
+        # contract — module docstring); bridges detected per policy.
+        edges = verified.filter(F.col("jaccard") >= self.threshold)
+        if keeper_map is not None:
+            edges = (
+                edges
+                .join(keeper_map, F.col("doc_a") == F.col("_sid"), "left")
+                .select(F.coalesce("_sk", "doc_a").alias("doc_a"), "doc_b")
+                .join(keeper_map, F.col("doc_b") == F.col("_sid"), "left")
+                .select("doc_a", F.coalesce("_sk", "doc_b").alias("doc_b"))
+            )
+        keepers, n_rejected, bridges = self._resolve_keepers(
+            new_docs, edges, seen_max
         )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * max(len(self.bands), 2)) // self.rows_per_task),
-        )
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_docs.rdd.getNumPartitions() < par:
-                new_docs = keep(new_docs.repartition(par, "doc_id"))
-            # shingle ARRAYS, not exploded rows: signatures derive narrowly
-            # (zero shuffles — see dedup.minhash_signatures) and the verify
-            # stage explodes only candidate docs' arrays
-            arr_new = keep(dd.shingle_arrays(new_docs))
-            sig_new = dd.minhash_signatures(new_docs, arrays_df=arr_new)
-            bands_new = keep(self._band_rows(sig_new))
-
-            # -- candidates: new x index (bucket-pruned) + new x new (batch
-            # LSH, hot-bucket capped, reusing the PERSISTED band rows —
-            # re-banding from sig_new would recompute the minhash agg).
-            # COLD-START FAST PATH: an empty index has no probe targets,
-            # no candidate seen docs, no keeper map.
-            cand_new = dd.lsh_candidate_pairs(
-                sig_new,
-                bands=self.bands,
-                max_bucket=self.max_bucket,
-                banded=bands_new,
+        if bridges and self.on_bridge == "error":
+            raise ValueError(
+                f"batch {batch_id} bridges previously-committed duplicate "
+                f"clusters {bridges[:5]}: a from-scratch batch run would "
+                "relabel committed keepers, which incremental ingest "
+                "cannot honor retroactively. Re-create the deduper with "
+                "on_bridge='greedy' to accept frozen-label semantics."
             )
-            index_has_rows = any(self.index.manifest["buckets"].values())
-            if index_has_rows:
-                cand_idx, probe_buckets = self._probe_index(bands_new, keep)
-                cand_idx = keep(cand_idx)
-                candidates = keep(
-                    cand_idx.select("doc_a", "doc_b")
-                    .union(cand_new.select("doc_a", "doc_b"))
-                    .distinct()
-                )
-                # candidate-only verification: shingle the candidate SEEN
-                # docs (bucket-pruned text fetch) and the new batch only
-                seen_ids = cand_idx.select(
-                    F.col("seen_doc_id").alias("doc_id")
-                ).distinct()
-                seen_rows = keep(self._candidate_corpus_rows(seen_ids))
-                arr_all = keep(
-                    arr_new.union(
-                        dd.shingle_arrays(seen_rows.select("doc_id", "text"))
-                    )
-                )
-                keeper_map = seen_rows.select(
-                    F.col("doc_id").alias("_sid"),
-                    F.col("keeper_doc_id").alias("_sk"),
-                )
-            else:
-                probe_buckets = []
-                candidates = keep(cand_new.select("doc_a", "doc_b").distinct())
-                arr_all = arr_new
-                keeper_map = None
-            # localCheckpoint (not persist): `pairs` is returned to the
-            # caller and must survive the deduper's tables being deleted
-            verified = dd.jaccard_verify(
-                new_docs, candidates, arrays_df=arr_all
-            ).localCheckpoint()
-
-            # -- keepers: connected components over duplicate edges, with
-            # every SEEN endpoint replaced by its frozen keeper (greedy
-            # contract — module docstring); bridges detected per policy.
-            edges = verified.filter(F.col("jaccard") >= self.threshold)
-            if keeper_map is not None:
-                edges = (
-                    edges
-                    .join(keeper_map, F.col("doc_a") == F.col("_sid"), "left")
-                    .select(F.coalesce("_sk", "doc_a").alias("doc_a"), "doc_b")
-                    .join(keeper_map, F.col("doc_b") == F.col("_sid"), "left")
-                    .select("doc_a", F.coalesce("_sk", "doc_b").alias("doc_b"))
-                )
-            keepers, n_rejected, bridges = self._resolve_keepers(
-                new_docs, edges, seen_max
-            )
-            if bridges and self.on_bridge == "error":
-                raise ValueError(
-                    f"batch {batch_id} bridges previously-committed duplicate "
-                    f"clusters {bridges[:5]}: a from-scratch batch run would "
-                    "relabel committed keepers, which incremental ingest "
-                    "cannot honor retroactively. Re-create the deduper with "
-                    "on_bridge='greedy' to accept frozen-label semantics."
-                )
-
-            # -- commit 1: corpus rows (docs + keepers) with the applied
-            # interval riding the same manifest
-            corpus_rows = _with_system(
-                new_docs.select("doc_id", "text").join(keepers, "doc_id"),
-                self.corpus.bucket_expr("doc_id"),
-            )
-            self.corpus.append_buckets(
-                corpus_rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(corpus_applied + [rng])
-                    ),
-                },
-                lineage={"dedup_ingest": batch_id, "n_docs": n_new},
-            )
-            # -- commit 2: index band rows (ALL new docs — rejected ones
-            # carry transitivity). A crash here is healed by the gate above.
-            self._append_index(bands_new, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
-            "pairs": verified,
-            "keepers": keepers,
-            "n_new": n_new,
-            "n_accepted": n_new - n_rejected,
-            "n_rejected": n_rejected,
-            "bridges": bridges,
-            "probe_buckets": probe_buckets,
-            "corpus_version": self.corpus.version,
-            "index_version": self.index.version,
-        }
-
-    def _append_index(
-        self,
-        bands_new: DataFrame,
-        rng: tuple[int, int],
-        batch_id: str,
-        n_docs: int,
-    ) -> None:
-        rows = _with_system(
-            bands_new.select("bucket_key", "doc_id"),
-            self.index.bucket_expr("bucket_key"),
-        )
-        self.index.append_buckets(
-            rows,
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(applied_ranges(self.index, self.corpus) + [tuple(rng)])
-                )
+        # index rows: ALL new docs — rejected ones carry transitivity
+        return (
+            new_docs.select("doc_id", "text").join(keepers, "doc_id"),
+            self._index_rows(bands_new, keep, g["n_new"]),
+            {
+                "pairs": verified,
+                "keepers": keepers,
+                "n_accepted": g["n_new"] - n_rejected,
+                "n_rejected": n_rejected,
+                "bridges": bridges,
+                "probe_buckets": probe_buckets,
             },
-            lineage={"dedup_ingest": batch_id, "n_docs": n_docs},
-        )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        """Crash-retry path: the corpus committed id ranges the index lacks.
-        Re-sign exactly those ranges' rows and complete the index append.
-        Full-corpus scan filtered by the ranges — the rare recovery path
-        pays one scan; the hot path never does."""
-        batch_docs = (
-            self.corpus.read()
-            .filter(covered_expr(F.col("doc_id"), ranges))
-            .select("doc_id", "text")
-        )
-        sig = dd.minhash_signatures(batch_docs)
-        bands = self._band_rows(sig).persist()
-        try:
-            n = bands.select("doc_id").distinct().count()
-            rows = _with_system(
-                bands.select("bucket_key", "doc_id"),
-                self.index.bucket_expr("bucket_key"),
-            )
-            self.index.append_buckets(
-                rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(applied_ranges(self.index, self.corpus) + list(ranges))
-                    )
-                },
-                lineage={"dedup_heal": json.dumps(list(ranges)), "n_docs": n},
-            )
-        finally:
-            bands.unpersist()
-
-    # ----------------------------------------------------------- maintenance
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact corpus/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables)."""
-        return _auto_compact_tables(
-            [("corpus", self.corpus), ("index", self.index)], files_per_bucket
         )
 
     # ---------------------------------------------------------------- reads
@@ -925,7 +926,7 @@ _VEC_SCHEMA = T.StructType(
 )
 
 
-class IncrementalEmbeddingIndex:
+class IncrementalEmbeddingIndex(_IncrementalIndex):
     """Persisted SRP-LSH index over an embedding corpus with exactly-once
     batch ingest — the embedding twin of :class:`IncrementalDeduper`:
 
@@ -950,6 +951,9 @@ class IncrementalEmbeddingIndex:
     protocol as the text deduper (module docstring); ids must be unique
     within a batch and monotone across batches."""
 
+    _DATA, _ID, _TAG = "vectors", "vec_id", "emb"
+    _FRAMES = ("pairs",)
+
     #: repartition sizing for the signing chain (see IncrementalDeduper):
     #: the SRP matmul is one Arrow batch op per partition, so vectors take
     #: a larger per-task quantum than shingled text.
@@ -958,10 +962,7 @@ class IncrementalEmbeddingIndex:
     def __init__(self, spark: SparkSession, root: str):
         from migration_pair_spark.operators import similarity as sim
 
-        self.spark = spark
-        self.root = root
-        self.vectors = LakeTable.load(spark, os.path.join(root, "vectors"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         p = self.vectors.properties
         self.threshold = float(p["emb.threshold"])
         self.n_planes = int(p["emb.n_planes"])
@@ -969,6 +970,11 @@ class IncrementalEmbeddingIndex:
         self.dim = int(p["emb.dim"])
         self.max_bucket = int(p.get("emb.max_bucket", "0")) or None
         self._weights = sim.srp_weights(self.n_tables, self.n_planes, self.dim)
+
+    vectors = property(lambda self: self.data)
+    # bucket rows per vector: the verify stage's exact-cosine HOF is
+    # interpreted per element and must keep its parallelism
+    _fan_out = property(lambda self: self.n_tables)
 
     @classmethod
     def create(
@@ -989,32 +995,17 @@ class IncrementalEmbeddingIndex:
             d_planes, d_tables = sim.neardup_params(threshold)
             n_planes = n_planes if n_planes is not None else d_planes
             n_tables = n_tables if n_tables is not None else d_tables
-        LakeTable.create(
-            spark,
-            os.path.join(root, "vectors"),
-            _VEC_SCHEMA,
-            key_col="vec_id",
-            n_buckets=vector_buckets,
-            properties={
-                "emb.threshold": str(threshold),
-                "emb.n_planes": str(n_planes),
-                "emb.n_tables": str(n_tables),
-                "emb.dim": str(dim if dim is not None else sim.EMB_DIM),
-                "emb.max_bucket": str(max_bucket or 0),
-                APPLIED_PROP: "[]",
-            },
+        props = {
+            "emb.threshold": str(threshold),
+            "emb.n_planes": str(n_planes),
+            "emb.n_tables": str(n_tables),
+            "emb.dim": str(dim if dim is not None else sim.EMB_DIM),
+            "emb.max_bucket": str(max_bucket or 0),
+        }
+        return cls._create_pair(
+            spark, root, _VEC_SCHEMA, vector_buckets, props,
+            _INDEX_SCHEMA, index_buckets,
         )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _INDEX_SCHEMA,
-            key_col="bucket_key",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-        )
-        return cls(spark, root)
-
-    # ------------------------------------------------------------- internals
 
     def _bucket_rows(self, emb: DataFrame) -> DataFrame:
         """(bucket_key, doc_id) SRP bucket rows for the index — doc_id names
@@ -1029,235 +1020,63 @@ class IncrementalEmbeddingIndex:
             "doc_id",
         )
 
-    def probe_lake_buckets(self, bucket_rows: DataFrame) -> list[int]:
-        ids = (
-            bucket_rows.select(self.index.bucket_expr("bucket_key").alias("b"))
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["b"]) for r in ids)
-
-    def _candidates(
-        self, new_emb: DataFrame, bucket_rows: DataFrame, keep=lambda df: df
-    ):
-        """(vec_a, vec_b, seen ids) candidate pairs: bucket-pruned index
-        probe (new x seen, hot-bucket capped) + SRP self-join within the
-        batch (new x new, same cap). The self-join reuses the PERSISTED
-        ``bucket_rows`` — bucket_key = "table|bucket" is injective over
-        (_t, _bucket) for fixed-width signatures, so joining on it is the
-        same banding, without re-running the Arrow matmul a second time.
-        ``keep`` persists the pruned index scan across the cap's two
-        consumers — see IncrementalDeduper._probe_index."""
-        lake_buckets = self.probe_lake_buckets(bucket_rows)
-        idx = (
-            self.index.read_buckets(lake_buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("bucket_key", F.col("doc_id").alias("seen_id"))
-        )
-        if self.max_bucket:
-            idx = keep(idx)
-        idx = _cap_hot_buckets(idx, "bucket_key", "seen_id", self.max_bucket)
-        vs_seen = (
-            bucket_rows.select("bucket_key", F.col("doc_id").alias("new_id"))
-            .join(idx, "bucket_key")
-            .filter(F.col("seen_id") != F.col("new_id"))
-            .select(
-                F.least("seen_id", "new_id").alias("vec_a"),
-                F.greatest("seen_id", "new_id").alias("vec_b"),
-                "seen_id",
-            )
-            .distinct()
-        )
-        vs_new = dd.capped_self_join(
-            bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
-            "vec_a", "vec_b",
-        )
-        return vs_seen, vs_new, lake_buckets
-
-    def _candidate_vectors(self, seen_ids: DataFrame) -> DataFrame:
-        bucket_rows = (
-            seen_ids.select(self.vectors.bucket_expr("vec_id").alias("b"))
-            .distinct()
-            .collect()
-        )
-        buckets = sorted(int(r["b"]) for r in bucket_rows)
-        rows = (
-            self.vectors.read_buckets(buckets)
-            .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            .select("vec_id", "embedding")
-        )
-        return rows.join(F.broadcast(seen_ids), "vec_id", "left_semi")
-
-    # --------------------------------------------------------------- ingest
+    _sign = _bucket_rows
 
     def ingest(self, new_emb: DataFrame, batch_id: str) -> dict:
         """Process one batch of (vec_id, embedding) rows: near-dup pairs vs
         the index and within the batch (exact verified cosine >= threshold),
         then append vectors + bucket rows. Idempotent per id range; heals a
         crashed prior batch like the text deduper."""
+        return self._ingest(new_emb, batch_id)
+
+    def _probe_verify(self, new_emb, keep, g, batch_id):
         from migration_pair_spark.operators import similarity as sim
 
-        g = _ingest_gate(
-            self.vectors, self.index, new_emb, batch_id, "vec_id", "vec ids",
-            self._heal_index,
+        bucket_rows = keep(self._sign(new_emb))
+        vecs = new_emb.select("vec_id", "embedding")
+        # within-batch SRP self-join (same cap) on the PERSISTED bucket
+        # rows — bucket_key = "table|bucket" is injective over (_t,
+        # _bucket) for fixed-width signatures, so joining on it is the
+        # same banding, without re-running the Arrow matmul
+        candidates = dd.capped_self_join(
+            bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
+            "vec_a", "vec_b",
         )
-        if g["status"] == "empty":
-            return {"replayed": False, "empty": True, "pairs": None, "n_new": 0}
-        if g["status"] == "replayed":
-            out = {"replayed": True, "pairs": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, vec_applied = g["n_new"], g["rng"], g["applied"]
-
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # fixed-shape pipeline — AQE off for the ingest's jobs (see
-        # IncrementalDeduper.ingest)
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        # small-batch parallelism fix, row-count sized — see
-        # IncrementalDeduper.ingest (vectors are cheaper per row than
-        # shingled docs, so the per-task quantum is larger). The SHUFFLE
-        # width is sized by the derived bucket-row volume (n_tables rows
-        # per vector) — the verify stage's exact-cosine HOF is interpreted
-        # per element and must keep its parallelism (a doc-count-sized
-        # width of 1 serialized it: measured 10 s -> 19 s at sf0.1).
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
-        )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * self.n_tables) // self.rows_per_task),
-        )
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_emb.rdd.getNumPartitions() < par:
-                new_emb = keep(new_emb.repartition(par, "vec_id"))
-            bucket_rows = keep(self._bucket_rows(new_emb))
-            # cold-start fast path mirrors the text deduper: an empty index
-            # has nothing to probe and no candidate vectors to fetch
-            if any(self.index.manifest["buckets"].values()):
-                vs_seen, vs_new, probe_buckets = self._candidates(
-                    new_emb, bucket_rows, keep
-                )
-                vs_seen = keep(vs_seen)
-                candidates = (
-                    vs_seen.select("vec_a", "vec_b").union(vs_new).distinct()
-                )
-                seen_vecs = self._candidate_vectors(
-                    vs_seen.select(F.col("seen_id").alias("vec_id")).distinct()
-                )
-                all_vecs = keep(
-                    new_emb.select("vec_id", "embedding").union(seen_vecs)
-                )
-            else:
-                probe_buckets = []
-                candidates = dd.capped_self_join(
-                    bucket_rows, ["bucket_key"], "doc_id", self.max_bucket,
-                    "vec_a", "vec_b",
-                )
-                all_vecs = keep(new_emb.select("vec_id", "embedding"))
-            qa = sim._quantized_side(all_vecs, "vec_a", "vec_id", "embedding")
-            qb = sim._quantized_side(all_vecs, "vec_b", "vec_id", "embedding")
-            cos = sim._exact_cosine(
-                sim._int_dot(F.col("_q_vec_a"), F.col("_q_vec_b")),
-                F.col("_n2_vec_a"),
-                F.col("_n2_vec_b"),
+        probe_buckets = []
+        if self._index_has_rows():
+            vs_seen, probe_buckets = self._probe_index(bucket_rows, keep)
+            vs_seen = keep(vs_seen)
+            candidates = (
+                vs_seen.select(F.col("doc_a").alias("vec_a"),
+                               F.col("doc_b").alias("vec_b"))
+                .union(candidates)
+                .distinct()
             )
-            pairs = (
-                candidates.join(qa, "vec_a")
-                .join(qb, "vec_b")
-                .withColumn("_sim", cos)
-                .filter(F.col("_sim") >= F.lit(self.threshold))
-                .select("vec_a", "vec_b", F.round(F.col("_sim"), 4).alias("cosine"))
-                .localCheckpoint()
-            )
-
-            self.vectors.append_buckets(
-                _with_system(
-                    new_emb.select("vec_id", "embedding"),
-                    self.vectors.bucket_expr("vec_id"),
-                ),
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(vec_applied + [rng])
-                    ),
-                },
-                lineage={"emb_ingest": batch_id, "n_vecs": n_new},
-            )
-            self._append_index(bucket_rows, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
-            "pairs": pairs,
-            "n_new": n_new,
-            "probe_buckets": probe_buckets,
-            "vectors_version": self.vectors.version,
-            "index_version": self.index.version,
-        }
-
-    def _append_index(
-        self,
-        bucket_rows: DataFrame,
-        rng: tuple[int, int],
-        batch_id: str,
-        n: int,
-    ) -> None:
-        self.index.append_buckets(
-            _with_system(
-                bucket_rows.select("bucket_key", "doc_id"),
-                self.index.bucket_expr("bucket_key"),
-            ),
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(applied_ranges(self.index, self.vectors) + [tuple(rng)])
-                )
-            },
-            lineage={"emb_ingest": batch_id, "n_vecs": n},
+            vecs = vecs.union(self._candidate_rows(
+                vs_seen.select(F.col("seen_doc_id").alias("vec_id")).distinct(),
+                "embedding",
+            ))
+        all_vecs = keep(vecs)
+        qa = sim._quantized_side(all_vecs, "vec_a", "vec_id", "embedding")
+        qb = sim._quantized_side(all_vecs, "vec_b", "vec_id", "embedding")
+        cos = sim._exact_cosine(
+            sim._int_dot(F.col("_q_vec_a"), F.col("_q_vec_b")),
+            F.col("_n2_vec_a"),
+            F.col("_n2_vec_b"),
         )
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact vectors/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables)."""
-        return _auto_compact_tables(
-            [("vectors", self.vectors), ("index", self.index)],
-            files_per_bucket,
+        pairs = (
+            candidates.join(qa, "vec_a")
+            .join(qb, "vec_b")
+            .withColumn("_sim", cos)
+            .filter(F.col("_sim") >= F.lit(self.threshold))
+            .select("vec_a", "vec_b", F.round(F.col("_sim"), 4).alias("cosine"))
+            .localCheckpoint()
         )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        batch = (
-            self.vectors.read()
-            .filter(covered_expr(F.col("vec_id"), ranges))
-            .select("vec_id", "embedding")
+        return (
+            new_emb.select("vec_id", "embedding"),
+            self._index_rows(bucket_rows, keep, g["n_new"]),
+            {"pairs": pairs, "probe_buckets": probe_buckets},
         )
-        rows = self._bucket_rows(batch).persist()
-        try:
-            n = rows.select("doc_id").distinct().count()
-            self.index.append_buckets(
-                _with_system(
-                    rows.select("bucket_key", "doc_id"),
-                    self.index.bucket_expr("bucket_key"),
-                ),
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(applied_ranges(self.index, self.vectors) + list(ranges))
-                    )
-                },
-                lineage={"emb_heal": json.dumps(list(ranges)), "n_vecs": n},
-            )
-        finally:
-            rows.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -1292,7 +1111,7 @@ _CHUNK_INDEX_SCHEMA = T.StructType(
 )
 
 
-class IncrementalChunkIndex:
+class IncrementalChunkIndex(_IncrementalIndex):
     """A persisted (corpus, chunk-key index) pair with exactly-once batch
     ingest of CCNet-style span dedup (dedup.chunk_dedup semantics): each
     new document is rewritten to the corpus-wide first occurrences of its
@@ -1304,9 +1123,13 @@ class IncrementalChunkIndex:
     many million pages carry it, and the probe join is 1:m with no
     quadratic hot-bucket exposure at all). The probe reads only the index
     lake buckets the batch's chunk keys hash into (bounded driver collect,
-    same shape as the CDC gate). AQE stays ON here — unlike the
-    fixed-shape LSH ingest, this pipeline's shuffles (probe join, firsts
-    agg, reassembly) have data-dependent sizes AQE can right-size.
+    same shape as the CDC gate). AQE is OFF for the ingest's own jobs, as
+    in the LSH/SRP ingests: the pipeline is fixed-shape (the probe join is
+    explicitly broadcast on the pushed-IN path and 1:m key-joined
+    otherwise; the firsts agg and reassembly partial-aggregate), AQE's
+    per-stage materialization barrier billed one extra JOB per shuffle
+    stage, and the scoped shuffle width already right-sizes the
+    partitions AQE used to coalesce.
 
     Gate/heal contract: identical to :class:`IncrementalDeduper` — a
     ``dedup.applied`` doc-id interval set on each table, updated
@@ -1315,13 +1138,21 @@ class IncrementalChunkIndex:
     later ingest heals it FIRST (an index missing committed chunk keys
     would let a duplicated span through — an acceptance that can never be
     retracted). Healing re-chunks exactly the pending id ranges from the
-    corpus and appends the chunk keys not already present; chunking is
-    deterministic, so the healed index is byte-equal to a clean run's.
+    corpus and appends the chunk keys not already present (the same probe
+    the crashed run used — the crash happened before its index append, so
+    the index state is identical); chunking is deterministic, so the
+    healed index is byte-equal to a clean run's.
 
     Reference parity note: the reference (Mycenae) has no dedup surface at
     all — this extends the engine's LLM-pipeline family
     (/root/reference/Tasks/MigrationTask.cs:125-151 is a row copier); the
     design mirrors the repo's own IncrementalDeduper contract instead."""
+
+    _TAG = "chunk"
+    _FRAMES = ("rewritten",)
+    _COUNTERS = ("n_chunks", "n_kept")
+    #: chunk occurrences per doc (~words / w) sizing the shuffle width
+    _fan_out = 16
 
     #: repartition sizing for the narrow chunking map (chunking is lighter
     #: than shingling — fewer output rows per doc, no k-gram explosion)
@@ -1340,10 +1171,7 @@ class IncrementalChunkIndex:
     probe_isin_max_keys = 1024
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        self.corpus = LakeTable.load(spark, os.path.join(root, "corpus"))
-        self.index = LakeTable.load(spark, os.path.join(root, "index"))
+        super().__init__(spark, root)
         self.w = int(self.corpus.properties["chunk.w"])
         # persisted ck values embed the tokenizer: loading an index built
         # with a DIFFERENT tokenizer would silently re-admit every seen
@@ -1362,6 +1190,8 @@ class IncrementalChunkIndex:
         #: ("isin" fast path / "join" bucket scan / None = empty index)
         self.last_probe_mode: str | None = None
 
+    corpus = property(lambda self: self.data)
+
     @classmethod
     def create(
         cls,
@@ -1375,40 +1205,17 @@ class IncrementalChunkIndex:
             "chunk.w": str(w),
             "chunk.tokenizer": dd.CHUNK_TOKENIZER,
             SWEEP_PROP: "0",  # see SWEEP_PROP: property-backed from birth
-            APPLIED_PROP: "[]",
         }
-        LakeTable.create(
-            spark,
-            os.path.join(root, "corpus"),
-            _CHUNK_CORPUS_SCHEMA,
-            key_col="doc_id",
-            n_buckets=corpus_buckets,
-            properties=props,
-            # src_key blooms bound purge_source to ~O(files holding the
-            # purged url): urls hash-spread across doc-id buckets, so
-            # min/max zones never prune them — blooms are the only skip
-            bloom_filter_cols=("src_key",),
-        )
-        LakeTable.create(
-            spark,
-            os.path.join(root, "index"),
-            _CHUNK_INDEX_SCHEMA,
-            key_col="ck",
-            n_buckets=index_buckets,
-            properties={APPLIED_PROP: "[]"},
-            # chunk keys are md5 hex (uniform): zone maps can never prune
-            # them, blooms always can — they power both the pushed-IN
-            # probe's row-group skipping and point lookups on the index
-            bloom_filter_cols=("ck",),
-        )
-        return cls(spark, root)
-
-    # ------------------------------------------------------------- internals
-
-    def pending_ranges(self) -> list[tuple[int, int]]:
-        """Doc-id intervals committed to the corpus but not the index."""
-        return subtract_ranges(
-            applied_ranges(self.corpus), applied_ranges(self.index, self.corpus)
+        # src_key blooms bound purge_source to ~O(files holding the purged
+        # url): urls hash-spread across doc-id buckets, so min/max zones
+        # never prune them — blooms are the only skip. Chunk keys are md5
+        # hex (uniform): zone maps can never prune them, blooms always can
+        # — they power both the pushed-IN probe's row-group skipping and
+        # point lookups on the index.
+        return cls._create_pair(
+            spark, root, _CHUNK_CORPUS_SCHEMA, corpus_buckets, props,
+            _CHUNK_INDEX_SCHEMA, index_buckets,
+            data_blooms=("src_key",), index_blooms=("ck",),
         )
 
     def purge_source(self, values, conflict_retries: int = 3) -> int:
@@ -1428,27 +1235,16 @@ class IncrementalChunkIndex:
         file-pruned by the src_key blooms recorded at create.
 
         Returns the corpus's new version."""
-        self.corpus.refresh()
-        self.index.refresh()
-        pending = self.pending_ranges()
-        if pending:
-            raise ValueError(
-                f"purge_source: index lags the corpus (pending id ranges "
-                f"{pending}) — run any ingest or sweep first (it heals "
-                f"automatically), then purge"
-            )
+        self._refuse_while_lagging("purge_source", "any ingest or sweep")
         return self.corpus.purge_matching(
             "src_key", values, conflict_retries=conflict_retries
         )
 
-    def probe_lake_buckets(self, cks: DataFrame) -> list[int]:
-        """The index lake buckets the probe must open: distinct
-        pmod(xxhash64(ck), n_buckets) over the batch's chunk keys. Bounded
-        driver collect (<= index.n_buckets values)."""
-        rows = (
-            cks.select(self.index.bucket_expr("ck").alias("b")).distinct().collect()
-        )
-        return sorted(int(r["b"]) for r in rows)
+    def _sign(self, docs: DataFrame) -> DataFrame:
+        return dd.chunk_rows(docs, w=self.w)
+
+    def _index_rows(self, chunks: DataFrame, keep, n_docs: int) -> DataFrame:
+        return self._flag_chunks(chunks, keep, n_docs)[1]
 
     def _flag_chunks(
         self, chunks: DataFrame, keep=lambda df: df, n_docs: int | None = None
@@ -1466,9 +1262,8 @@ class IncrementalChunkIndex:
         so a batch with more docs than the key cap skips the
         overflow-detection distinct entirely instead of paying a full
         shuffle just to learn "too many" before the join (review-caught)."""
-        index_has_rows = any(self.index.manifest["buckets"].values())
         self.last_probe_mode = None
-        if index_has_rows:
+        if self._index_has_rows():
             small = None
             if self.probe_isin_max_keys and (
                 n_docs is None or n_docs <= self.probe_isin_max_keys
@@ -1509,10 +1304,9 @@ class IncrementalChunkIndex:
                 # bloom filters, so this reads footers + blooms, not the
                 # index's data pages; the surviving rows are a subset of
                 # the batch keys, hence the explicit broadcast (AQE can't
-                # see the size — ingest paths may scope it off)
+                # see the size — ingest paths scope it off)
                 idx = F.broadcast(
-                    self.index.read_buckets(probe_buckets)
-                    .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+                    _live(self.index, probe_buckets)
                     .filter(F.col("ck").isin(keys))
                     .select("ck")
                     .withColumn("_seen", F.lit(True))
@@ -1521,8 +1315,7 @@ class IncrementalChunkIndex:
                 self.last_probe_mode = "join"
                 probe_buckets = self.probe_lake_buckets(chunks.select("ck"))
                 idx = (
-                    self.index.read_buckets(probe_buckets)
-                    .filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+                    _live(self.index, probe_buckets)
                     .select("ck")
                     .withColumn("_seen", F.lit(True))
                 )
@@ -1565,185 +1358,40 @@ class IncrementalChunkIndex:
         deduped_text) for the batch (localCheckpointed — survives the
         tables), plus counters}. On a replayed batch ``rewritten`` is None
         (already persisted in the corpus)."""
-        g = _ingest_gate(
-            self.corpus, self.index, new_docs, batch_id, "doc_id", "doc ids",
-            self._heal_index,
+        return self._ingest(new_docs, batch_id, corpus_properties)
+
+    def _probe_verify(self, new_docs, keep, g, batch_id):
+        chunks = keep(self._sign(new_docs))
+        flagged, firsts, probe_buckets = self._flag_chunks(
+            chunks, keep, n_docs=g["n_new"]
         )
-        if g["status"] == "empty":
-            return {
-                "replayed": False,
-                "empty": True,
-                "rewritten": None,
-                "n_new": 0,
-                "n_chunks": 0,
-                "n_kept": 0,
-            }
-        if g["status"] == "replayed":
-            out = {"replayed": True, "rewritten": None}
-            if g["healed"]:
-                out["healed"] = "index"
-            return out
-        n_new, rng, corpus_applied = g["n_new"], g["rng"], g["applied"]
-
-        cached: list[DataFrame] = []
-
-        def keep(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
-        # batch-sized shuffle width (scoped), sized by the derived
-        # chunk-occurrence volume (~docs x words/w), not docs. AQE is now
-        # OFF for the ingest's own jobs, like the LSH/SRP ingests: the
-        # pipeline is fixed-shape (the probe join is explicitly broadcast
-        # on the isin path and 1:m key-joined otherwise; the firsts agg
-        # and reassembly partial-aggregate), and AQE's per-stage
-        # materialization barrier billed one extra JOB per shuffle stage
-        # (measured r6: 47 jobs -> fewer; wall compared below; the round-5 rationale
-        # predated the width scoping that now right-sizes the partitions
-        # AQE used to coalesce).
-        par = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, n_new // self.rows_per_task),
+        # localCheckpoint (not persist): returned to the caller and must
+        # survive the index's tables being deleted; also consumed twice
+        # below (corpus rows + counters)
+        rewritten = dd.chunk_reassemble(flagged).localCheckpoint()
+        sums = rewritten.agg(
+            F.sum("n_chunks").alias("nc"), F.sum("n_kept").alias("nk")
+        ).collect()[0]
+        # LEFT join: a NULL-text doc has no chunks and therefore no
+        # rewritten row, but its id range is marked applied with this
+        # commit — an inner join would drop the doc from the corpus
+        # FOREVER while the gate replays its redelivery as a no-op
+        # (review-caught, reproduced). Such docs persist with NULL
+        # rewrite columns.
+        # provenance rides along when the batch carries it (the CDC
+        # sweep passes the page url as src_key — purge_source's handle)
+        doc_cols = ["doc_id", "text"] + (
+            ["src_key"] if "src_key" in new_docs.columns else []
         )
-        width = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, (n_new * 16) // self.rows_per_task),
-        )
-        aqe_off = _aqe_disabled(self.spark)
-        aqe_off.__enter__()
-        spp = _scoped_shuffle_partitions(self.spark, width)
-        spp.__enter__()
-        try:
-            if 1 < par and new_docs.rdd.getNumPartitions() < par:
-                new_docs = keep(new_docs.repartition(par, "doc_id"))
-            chunks = keep(dd.chunk_rows(new_docs, w=self.w))
-            flagged, firsts, probe_buckets = self._flag_chunks(
-                chunks, keep, n_docs=n_new
-            )
-            # localCheckpoint (not persist): returned to the caller and must
-            # survive the index's tables being deleted; also consumed twice
-            # below (corpus rows + counters)
-            rewritten = dd.chunk_reassemble(flagged).localCheckpoint()
-            sums = rewritten.agg(
-                F.sum("n_chunks").alias("nc"), F.sum("n_kept").alias("nk")
-            ).collect()[0]
-
-            # LEFT join: a NULL-text doc has no chunks and therefore no
-            # rewritten row, but its id range is marked applied with this
-            # commit — an inner join would drop the doc from the corpus
-            # FOREVER while the gate replays its redelivery as a no-op
-            # (review-caught, reproduced). Such docs persist with NULL
-            # rewrite columns.
-            # provenance rides along when the batch carries it (the CDC
-            # sweep passes the page url as src_key — purge_source's handle)
-            doc_cols = ["doc_id", "text"] + (
-                ["src_key"] if "src_key" in new_docs.columns else []
-            )
-            corpus_rows = _with_system(
-                new_docs.select(*doc_cols).join(rewritten, "doc_id", "left"),
-                self.corpus.bucket_expr("doc_id"),
-            )
-            props = {
-                APPLIED_PROP: json.dumps(merge_ranges(corpus_applied + [rng])),
-            }
-            if corpus_properties:
-                props.update(
-                    corpus_properties(rng[0], rng[1])
-                    if callable(corpus_properties)
-                    else dict(corpus_properties)
-                )
-            self.corpus.append_buckets(
-                corpus_rows,
-                properties=props,
-                lineage={"chunk_ingest": batch_id, "n_docs": n_new},
-            )
-            self._append_index(firsts, rng, batch_id, n_new)
-        finally:
-            spp.__exit__(None, None, None)
-            aqe_off.__exit__(None, None, None)
-            for df in cached:
-                df.unpersist()
-        return {
-            "replayed": False,
-            "rewritten": rewritten,
-            "n_new": n_new,
-            "n_chunks": int(sums["nc"] or 0),
-            "n_kept": int(sums["nk"] or 0),
-            "probe_buckets": probe_buckets,
-            "corpus_version": self.corpus.version,
-            "index_version": self.index.version,
-        }
-
-    def _append_index(
-        self, firsts: DataFrame, rng: tuple[int, int], batch_id: str, n_docs: int
-    ) -> None:
-        rows = _with_system(
-            firsts.select("ck", "first_occ"), self.index.bucket_expr("ck")
-        )
-        self.index.append_buckets(
-            rows,
-            properties={
-                APPLIED_PROP: json.dumps(
-                    merge_ranges(
-                        applied_ranges(self.index, self.corpus) + [tuple(rng)]
-                    )
-                )
+        return (
+            new_docs.select(*doc_cols).join(rewritten, "doc_id", "left"),
+            firsts,
+            {
+                "rewritten": rewritten,
+                "n_chunks": int(sums["nc"] or 0),
+                "n_kept": int(sums["nk"] or 0),
+                "probe_buckets": probe_buckets,
             },
-            lineage={"chunk_ingest": batch_id, "n_docs": n_docs},
-        )
-
-    def _heal_index(self, ranges: list[tuple[int, int]]) -> None:
-        """Crash-retry path: the corpus committed id ranges the index lacks.
-        Re-chunk exactly those ranges' rows, anti-join against the index
-        (same probe the crashed run used — the crash happened before its
-        index append, so the index state is identical), and complete the
-        append. Chunking is deterministic, so the healed index is
-        byte-equal to a clean run's."""
-        batch_docs = (
-            self.corpus.read()
-            .filter(covered_expr(F.col("doc_id"), ranges))
-            .select("doc_id", "text")
-        )
-        chunks = dd.chunk_rows(batch_docs, w=self.w).persist()
-        try:
-            # interval sizes over-count docs (gap absorption) — harmless:
-            # an overestimate only skips the fast path, never correctness
-            _, firsts, _ = self._flag_chunks(
-                chunks, n_docs=sum(hi - lo + 1 for lo, hi in ranges)
-            )
-            firsts = firsts.persist()
-            # lineage count from the already-persisted chunks — a second
-            # corpus scan just for the counter would double the recovery
-            # path's heaviest read (review-caught)
-            n = chunks.select("doc_id").distinct().count()
-            rows = _with_system(
-                firsts.select("ck", "first_occ"), self.index.bucket_expr("ck")
-            )
-            self.index.append_buckets(
-                rows,
-                properties={
-                    APPLIED_PROP: json.dumps(
-                        merge_ranges(
-                            applied_ranges(self.index, self.corpus) + list(ranges)
-                        )
-                    )
-                },
-                lineage={"chunk_heal": json.dumps(list(ranges)), "n_docs": n},
-            )
-            firsts.unpersist()
-        finally:
-            chunks.unpersist()
-
-    # ----------------------------------------------------------- maintenance
-
-    def auto_compact(self, files_per_bucket: int) -> dict:
-        """Compact corpus/index buckets holding more than
-        ``files_per_bucket`` files (see _auto_compact_tables). The sweep
-        bridge and streaming ingest loops call this per-batch behind their
-        own knobs so a long-running loop's probe cost tracks data volume,
-        not batch history."""
-        return _auto_compact_tables(
-            [("corpus", self.corpus), ("index", self.index)], files_per_bucket
         )
 
     # ---------------------------------------------------------------- reads

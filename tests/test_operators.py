@@ -188,20 +188,31 @@ def test_neardup_hi_production_regime_selective(spark):
 def test_dedup_clusters_connected_components(spark):
     """Connected components: a 4-hop chain resolves; separate components
     stay separate; singletons keep themselves — on BOTH execution paths
-    (driver union-find fast path and distributed label propagation)."""
-    docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(1, 9), (9, 4), (4, 7), (7, 8), (2, 3)], "doc_a long, doc_b long"
-    )
-    expected = {0: 0, 1: 1, 9: 1, 4: 1, 7: 1, 8: 1, 2: 2, 3: 2, 5: 5, 6: 6}
-    for cap in (dd.DRIVER_CC_MAX_EDGES, 0):  # driver path / distributed path
-        got = {
-            r.doc_id: r.keeper_doc_id
-            for r in dd.dedup_clusters(
-                docs, pairs, driver_cc_max_edges=cap
-            ).collect()
-        }
-        assert got == expected, f"cap={cap}"
+    (driver union-find fast path and distributed label propagation).
+    Non-integral ids resolve to the same, existing keepers on both: the
+    driver path's long cast failed string ids and truncated fractional
+    ones onto a keeper (1.0) that is no document at all."""
+    cases = [
+        (
+            "long",
+            range(10),
+            [(1, 9), (9, 4), (4, 7), (7, 8), (2, 3)],
+            {0: 0, 1: 1, 9: 1, 4: 1, 7: 1, 8: 1, 2: 2, 3: 2, 5: 5, 6: 6},
+        ),
+        ("string", "abc", [("a", "b")], {"a": "a", "b": "a", "c": "c"}),
+        ("double", [1.5, 1.7, 3.0], [(1.5, 3.0)], {1.5: 1.5, 1.7: 1.7, 3.0: 1.5}),
+    ]
+    for ddl, ids, edges, expected in cases:
+        docs = spark.createDataFrame([(i,) for i in ids], f"doc_id {ddl}")
+        pairs = spark.createDataFrame(edges, f"doc_a {ddl}, doc_b {ddl}")
+        for cap in (dd.DRIVER_CC_MAX_EDGES, 0):  # driver path / distributed path
+            got = {
+                r.doc_id: r.keeper_doc_id
+                for r in dd.dedup_clusters(
+                    docs, pairs, driver_cc_max_edges=cap
+                ).collect()
+            }
+            assert got == expected, f"{ddl} cap={cap}"
 
 
 def test_dedup_clusters_driver_overflow_falls_back(spark):
